@@ -27,8 +27,25 @@ object Bucketing {
     */
   def writeBucketed(df: DataFrame, table: String, key: String,
       buckets: Int = 32): Unit =
-    df.write.mode("overwrite").format("parquet")
-      .bucketBy(buckets, key).sortBy(key)
+    writeAligned(df, table, "overwrite", buckets, Seq(key), Seq(key))
+
+  /** The one bucketed write every graft table lands through
+    * ([[writeBucketed]], [[IndexTables.persist]]'s staging write,
+    * [[IndexTables.appendIncrement]]): repartition on the bucket keys
+    * first, then bucketBy → sortBy → saveAsTable. bucketBy does NOT
+    * shuffle, so an unaligned input writes (write tasks × buckets)
+    * fragment files — measured 21 s vs 15 s on the sf1 cold s2 probe
+    * before persist aligned. Spark's bucket id is pmod(Murmur3, n), the
+    * same function hash-repartitioning uses, so each write task holds
+    * exactly one bucket's rows and the write lands one sorted file per
+    * bucket.
+    */
+  private[lake] def writeAligned(df: DataFrame, table: String, mode: String,
+      buckets: Int, bucketCols: Seq[String], sortCols: Seq[String]): Unit =
+    df.repartition(buckets, bucketCols.map(df.col): _*)
+      .write.mode(mode).format("parquet")
+      .bucketBy(buckets, bucketCols.head, bucketCols.tail: _*)
+      .sortBy(sortCols.head, sortCols.tail: _*)
       .saveAsTable(table)
 
   /** Equi-join two bucketed tables on their bucket keys — plans with

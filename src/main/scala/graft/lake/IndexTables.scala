@@ -66,17 +66,78 @@ object IndexTables {
     s"graft_${prefix}_$h"
   }
 
+  /** The `buckets` value that asks [[persist]] to size the table from
+    * its corpus ([[sizedBuckets]]): the default of [[persist]] and of
+    * every family persist API. A positive count is honored exactly.
+    */
+  final val Sized = 0
+
+  /** The most buckets a sized table gets — the fixed count every
+    * family used before tables were sized, which a multi-GB corpus
+    * still reaches.
+    */
+  final val MaxBuckets = 32
+
+  /** The bucket-count rule, as a pure function: one bucket per
+    * `maxSplitBytes` of corpus `bytes` (the split count of a Spark file
+    * scan over the corpus), rounded UP to a power of two and capped at
+    * `cap` (itself a power of two). Powers of two make the tables of
+    * one corpus nest — a bucket of an n-bucket table is the union of
+    * two buckets of the 2n-bucket one — and rounding up never gives
+    * fewer buckets than splits below the cap.
+    */
+  private[graft] def bucketsFor(bytes: Long, maxSplitBytes: Long,
+      cap: Int): Int = {
+    require(maxSplitBytes > 0, s"maxSplitBytes must be positive: $maxSplitBytes")
+    require(cap > 0 && Integer.bitCount(cap) == 1,
+      s"cap must be a power of two: $cap")
+    val splits =
+      if (bytes <= 0) 1L else math.min((bytes - 1) / maxSplitBytes + 1, cap)
+    if (splits <= 1) 1 else Integer.highestOneBit(splits.toInt - 1) << 1
+  }
+
+  /** The bucket count [[persist]] gives a table of the corpus at `path`
+    * when its caller names none: [[bucketsFor]] over the bytes of the
+    * corpus files (hidden `_`/`.` files skipped, as a scan skips them),
+    * split the way Spark splits a file scan —
+    * `FilePartition.maxSplitBytes`, i.e. `spark.sql.files.
+    * maxPartitionBytes`, `spark.sql.files.openCostInBytes` and the
+    * default parallelism — so no knob of its own. A tier of a few MB
+    * gets one bucket; a multi-GB corpus keeps [[MaxBuckets]]. An
+    * absent path sizes as empty.
+    */
+  def sizedBuckets(s: SparkSession, path: String, cap: Int = MaxBuckets): Int = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(s.sessionState.newHadoopConf())
+    val base = fs.makeQualified(root).toUri.getPath
+    val lens =
+      if (!fs.exists(root)) Seq.empty[Long]
+      else {
+        val it = fs.listFiles(root, true)
+        Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+          .filterNot(_.getPath.toUri.getPath.stripPrefix(base).split('/')
+            .exists(c => c.startsWith("_") || c.startsWith(".")))
+          .map(_.getLen).toSeq
+      }
+    val bytes = lens.sum
+    val openCost = s.sessionState.conf.filesOpenCostInBytes
+    bucketsFor(bytes, org.apache.spark.sql.execution.datasources.FilePartition
+      .maxSplitBytes(s, bytes + lens.size * openCost), cap)
+  }
+
   /** Write `df` as the persisted index table for `path`, bucketed (and
     * in-bucket sorted) on `bucketCols`, stamped with the corpus
     * signature taken BEFORE the write (the index derives from the
     * corpus as-read; a concurrent corpus rewrite makes the stamp
     * mismatch, which is the safe direction). The write lands in a
     * staging table that is stamped FIRST and swapped in second, so the
-    * serving name is never visible without its stamp. Returns the
+    * serving name is never visible without its stamp. `buckets` =
+    * [[Sized]] (the default) sizes the table from its corpus
+    * ([[sizedBuckets]]); any other count is used as given. Returns the
     * table name.
     */
   def persist(s: SparkSession, df: DataFrame, prefix: String, path: String,
-      bucketCols: Seq[String], buckets: Int = 32): String =
+      bucketCols: Seq[String], buckets: Int = Sized): String =
     commitPersist(s, df, prefix, path, bucketCols, buckets,
       commitToken(s, prefix, path))
 
@@ -108,6 +169,7 @@ object IndexTables {
       prefix: String, path: String, bucketCols: Seq[String], buckets: Int,
       expected: Option[String], beforeSwap: () => Unit,
       beforeIntent: () => Unit = () => ()): String = {
+    require(buckets >= 0, s"commitPersist($prefix, $path): buckets $buckets < 0")
     val table = tableName(prefix, path)
     val staging = table + "_staging"
     // checked at ENTRY, before building: the staging table name is
@@ -147,18 +209,9 @@ object IndexTables {
       val fs = loc.getFileSystem(s.sessionState.newHadoopConf())
       if (fs.exists(loc)) fs.delete(loc, true)
     }
+    val n = if (buckets == Sized) sizedBuckets(s, path) else buckets
     val sig = CorpusIndexCache.signature(path)
-    // repartition on the bucket keys first: bucketBy does NOT shuffle,
-    // so an unaligned input writes (write tasks × buckets) fragment
-    // files — measured 21 s vs 15 s on the sf1 cold s2 probe before
-    // this. Spark's bucket id is pmod(Murmur3, n), the same function
-    // hash-repartitioning uses, so each write task holds exactly one
-    // bucket's rows and the table lands as one sorted file per bucket.
-    df.repartition(buckets, bucketCols.map(df.col): _*)
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(buckets, bucketCols.head, bucketCols.tail: _*)
-      .sortBy(bucketCols.head, bucketCols.tail: _*)
-      .saveAsTable(staging)
+    Bucketing.writeAligned(df, staging, "overwrite", n, bucketCols, bucketCols)
     val token = java.util.UUID.randomUUID().toString
     s.sql(s"ALTER TABLE $staging SET TBLPROPERTIES " +
       s"('$SigProp' = '$sig', '$TokenProp' = '$token')")
@@ -432,8 +485,10 @@ object IndexTables {
     * weights per key on read; IncrementalIndexSpec pins all three).
     *
     * Mechanics: the increment lands as additional per-bucket files in
-    * the SAME bucket layout (repartition on the bucket cols first —
-    * the persist recipe — so each write task emits one bucket's file);
+    * the SAME bucket layout — the table's own bucket count, read from
+    * its spec and never re-sized here; only a full [[persist]] re-sizes
+    * — through persist's aligned write ([[Bucketing.writeAligned]]), so
+    * each write task emits one bucket's file;
     * bucketed reads absorb multi-file buckets, so downstream joins
     * keep consuming the layout exchange-free. Append happens BEFORE
     * the re-stamp: a crash between the two leaves new rows under the
@@ -467,11 +522,8 @@ object IndexTables {
     // name: saveAsTable append resolution must not depend on the
     // builder happening to project in table order
     val aligned = df.select(meta.schema.fieldNames.map(df.col): _*)
-    aligned.repartition(spec.numBuckets, cols.map(aligned.col): _*)
-      .write.mode("append").format("parquet")
-      .bucketBy(spec.numBuckets, cols.head, cols.tail: _*)
-      .sortBy(spec.sortColumnNames.head, spec.sortColumnNames.tail: _*)
-      .saveAsTable(table)
+    Bucketing.writeAligned(aligned, table, "append", spec.numBuckets, cols,
+      spec.sortColumnNames)
     // the append IS a commit: move the token so a concurrent
     // commitPersist whose build read the pre-append rows loses its
     // re-check instead of silently swapping the appended rows away
@@ -546,9 +598,10 @@ object IndexTables {
     * maintenance debt. Compaction re-persists the table's own rows
     * through the normal staging swap (the source scan materializes
     * into staging BEFORE the target drops), landing one sorted file
-    * per bucket again. The corpus is untouched, so the fresh stamp
-    * equals the current one — serving continuity, same rows, same
-    * layout contract (IncrementalIndexSpec pins all three). Returns
+    * per bucket again, at the table's own bucket count. The corpus is
+    * untouched, so the fresh stamp equals the current one — serving
+    * continuity, same rows, same layout contract (IncrementalIndexSpec
+    * pins all three; BucketSizingSpec the kept count). Returns
     * None when no fresh table is serving (nothing to compact).
     */
   def compact(s: SparkSession, prefix: String, path: String): Option[String] =
@@ -568,23 +621,9 @@ object IndexTables {
           tableName(prefix, path)))
       val spec = meta.bucketSpec.getOrElse(throw new IllegalStateException(
         s"compact: ${tableName(prefix, path)} has no bucket spec"))
-      // Read the source UN-bucketed for the rewrite: with bucketed
-      // reading on, the planner elides persist's aligning repartition
-      // against the scan's bucket partitioning and THEN disables the
-      // bucketed scan itself (a write is not a "beneficial" consumer),
-      // leaving multi-bucket tasks that write a file per bucket each —
-      // observed as a 4-bucket compaction landing 7 files. Un-bucketed,
-      // the scan reports no partitioning and the repartition survives.
-      val key = "spark.sql.sources.bucketing.enabled"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "false")
-      val t =
-        try commitPersist(s, s.table(tableName(prefix, path)), prefix, path,
-          spec.bucketColumnNames, spec.numBuckets, expected)
-        finally prev match {
-          case Some(v) => s.conf.set(key, v)
-          case None => s.conf.unset(key)
-        }
+      val t = unbucketedRead(s)(commitPersist(s,
+        s.table(tableName(prefix, path)), prefix, path,
+        spec.bucketColumnNames, spec.numBuckets, expected))
       // The corpus signature is UNCHANGED across a compaction, so
       // session-cache wrappers (Similarity.floatBucketIndex,
       // Dedup.corpusBandIndex) keyed on (path, signature) still read
@@ -628,16 +667,26 @@ object IndexTables {
       org.apache.spark.sql.catalyst.TableIdentifier(table))
     val spec = meta.bucketSpec.getOrElse(throw new IllegalStateException(
       s"deleteKeys: $table has no bucket spec"))
-    // un-bucketed source read — compact's lesson: bucketed reading lets
-    // the planner elide persist's aligning repartition and then disable
-    // the scan, misaligning the bucketed write
+    unbucketedRead(s)(persist(s,
+      s.table(table).join(org.apache.spark.sql.functions.broadcast(keys),
+        Seq(keyCol), "left_anti"),
+      prefix, path, spec.bucketColumnNames, spec.numBuckets))
+  }
+
+  /** Run `body` — a rewrite of a table from its own scan — with
+    * bucketed reading off. With it on, the planner elides the write's
+    * aligning repartition against the scan's bucket partitioning and
+    * THEN disables the bucketed scan itself (a write is not a
+    * "beneficial" consumer), leaving multi-bucket tasks that write a
+    * file per bucket each — observed as a 4-bucket compaction landing
+    * 7 files. Un-bucketed, the scan reports no partitioning and the
+    * repartition survives. The session's setting is restored after.
+    */
+  private def unbucketedRead[T](s: SparkSession)(body: => T): T = {
     val key = "spark.sql.sources.bucketing.enabled"
     val prev = s.conf.getOption(key)
     s.conf.set(key, "false")
-    try persist(s,
-      s.table(table).join(org.apache.spark.sql.functions.broadcast(keys),
-        Seq(keyCol), "left_anti"),
-      prefix, path, spec.bucketColumnNames, spec.numBuckets)
+    try body
     finally prev match {
       case Some(v) => s.conf.set(key, v)
       case None => s.conf.unset(key)

@@ -368,7 +368,7 @@ object Multimodal {
 
   /** Persist the perceptual-hash index table for tier `d`. */
   def persistPhashIndex(s: SparkSession, d: String,
-      buckets: Int = 32): String = {
+      buckets: Int = graft.lake.IndexTables.Sized): String = {
     import s.implicits._
     graft.lake.IndexTables.persist(s,
       perceptualHashes(

@@ -743,7 +743,7 @@ object Warehouse {
 
   /** Persist all four warehouse-state tables for tier `d`. */
   def persistWarehouseState(s: SparkSession, d: String,
-      buckets: Int = 32): Seq[String] = Seq(
+      buckets: Int = graft.lake.IndexTables.Sized): Seq[String] = Seq(
     graft.lake.IndexTables.persist(s, aggStateRelation(orders(s, d)),
       AggStatePrefix, ordersPath(d), Seq("o_custkey"), buckets),
     graft.lake.IndexTables.persist(s, kllStateRelation(orders(s, d)),

@@ -46,7 +46,7 @@ object Graph {
     * contract.
     */
   def persistAdjacency(s: SparkSession, d: String,
-      buckets: Int = 32): Seq[String] = Seq(
+      buckets: Int = graft.lake.IndexTables.Sized): Seq[String] = Seq(
     // the g1 table stores the PLAIN weighted edges (src, dst, w) — NOT
     // edgesWithOut's denormalized per-src out-weight (r13 verdict #3b:
     // a denormalized wout is invalidated GLOBALLY by any delta, which

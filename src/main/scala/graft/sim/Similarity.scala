@@ -599,7 +599,8 @@ object Similarity {
     * table invisible and consumers fall back to the session-cache
     * build. Returns the catalog table name.
     */
-  def persistAnnIndex(s: SparkSession, d: String, buckets: Int = 32): String = {
+  def persistAnnIndex(s: SparkSession, d: String,
+      buckets: Int = graft.lake.IndexTables.Sized): String = {
     VectorExpressions.ensureRegistered(s)
     graft.lake.IndexTables.persist(s,
       bucketTable(s, d).join(normedEmbeddings(s, d), "vec_id"),
@@ -1143,7 +1144,7 @@ object Similarity {
     * served table through its explicit `corpusIndex` parameter.
     */
   def persistAdmissionIndex(s: SparkSession, d: String,
-      buckets: Int = 32): String = {
+      buckets: Int = graft.lake.IndexTables.Sized): String = {
     VectorExpressions.ensureRegistered(s)
     graft.lake.IndexTables.persist(s, s12CorpusIndexFrame(s, d),
       AdmTablePrefix, s"$d/embeddings.parquet", Seq("tbl", "bk"), buckets)
@@ -1156,7 +1157,8 @@ object Similarity {
     * build-time calibration every later prober must share.
     */
   def persistAdmissionIndexFor(s: SparkSession, corpusPath: String,
-      corpus: DataFrame, familyN: Long, buckets: Int = 32): String = {
+      corpus: DataFrame, familyN: Long,
+      buckets: Int = graft.lake.IndexTables.Sized): String = {
     VectorExpressions.ensureRegistered(s)
     graft.lake.IndexTables.persist(s, embeddingBucketIndex(corpus, familyN),
       AdmTablePrefix, corpusPath, Seq("tbl", "bk"), buckets)

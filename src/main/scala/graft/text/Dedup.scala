@@ -857,7 +857,8 @@ object Dedup {
     * streaming admission ([[graft.streaming.Streams]]' admitStream)
     * takes the served table through its corpusBands parameter.
     */
-  def persistBandIndex(s: SparkSession, d: String, buckets: Int = 32): String = {
+  def persistBandIndex(s: SparkSession, d: String,
+      buckets: Int = graft.lake.IndexTables.Sized): String = {
     val docs = documents(s, d)
     val corp = docs.filter(col("doc_id") < 4L * docs.count() / 5L)
     persistBandIndexFor(s, s"$d/documents.parquet", corp, buckets)
@@ -868,7 +869,8 @@ object Dedup {
     * through this, then extends via [[appendBandIndex]].
     */
   def persistBandIndexFor(s: SparkSession, corpusPath: String,
-      corpus: DataFrame, buckets: Int = 32): String =
+      corpus: DataFrame,
+      buckets: Int = graft.lake.IndexTables.Sized): String =
     graft.lake.IndexTables.persist(s, bandIndex(corpus),
       BandTablePrefix, corpusPath, Seq("band", "bk"), buckets)
 

@@ -205,12 +205,16 @@ object Dsir {
     countsFromFlagged(flaggedFeatures(docs))
 
   /** Persist the feature-counts table for tier `d`. The table is tiny
-    * (≤ [[Buckets]] rows) — 8 buckets keeps the file count small while
-    * preserving the bucketed-layout contract appendIncrement needs.
+    * (≤ [[Buckets]] rows), so a sized table (the default) is capped at
+    * 8 buckets rather than [[graft.lake.IndexTables.MaxBuckets]]: few
+    * files, and still the bucketed layout appendIncrement needs.
     */
-  def persistRatioTable(s: SparkSession, d: String, buckets: Int = 8): String =
+  def persistRatioTable(s: SparkSession, d: String,
+      buckets: Int = graft.lake.IndexTables.Sized): String =
     graft.lake.IndexTables.persist(s, countsOf(documents(s, d)),
-      DsirPrefix, dsirPath(d), Seq("f"), buckets)
+      DsirPrefix, dsirPath(d), Seq("f"),
+      if (buckets != graft.lake.IndexTables.Sized) buckets
+      else graft.lake.IndexTables.sizedBuckets(s, dsirPath(d), cap = 8))
 
   /** Drop the counts table for tier `d`, if any. */
   def dropRatioTable(s: SparkSession, d: String): Unit =

@@ -325,7 +325,7 @@ object SubstringDedup {
 
   /** Persist the occurrence index table for tier `d`. */
   def persistOccurrenceIndex(s: SparkSession, d: String,
-      buckets: Int = 32): String =
+      buckets: Int = graft.lake.IndexTables.Sized): String =
     graft.lake.IndexTables.persist(s,
       occurrencesOf(documents(s, d)),
       NgoPrefix, ngoPath(d), Seq("ngh"), buckets)

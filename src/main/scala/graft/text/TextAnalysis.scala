@@ -1153,7 +1153,7 @@ object TextAnalysis {
 
   /** Persist the trained-token stream table for tier `d`. */
   def persistBpeStream(s: SparkSession, d: String,
-      buckets: Int = 32): String =
+      buckets: Int = graft.lake.IndexTables.Sized): String =
     graft.lake.IndexTables.persist(s, bpeTokenText(s, d),
       BpeStreamPrefix, bpePath(d), Seq("doc_id"), buckets)
 

@@ -318,7 +318,7 @@ object Winnowing {
 
   /** Persist both fingerprint index tables for tier `d`. */
   def persistFingerprintIndex(s: SparkSession, d: String,
-      buckets: Int = 32): Seq[String] = {
+      buckets: Int = graft.lake.IndexTables.Sized): Seq[String] = {
     val docs = documents(s, d)
     Seq(
       graft.lake.IndexTables.persist(s,
